@@ -457,13 +457,13 @@ def ivljoin_probe(spark, n_rows: int, n_series: int) -> dict:
 
 
 def ivfassign_probe(spark, n_vecs: int, n_centroids: int, dim: int = 64) -> dict:
-    """IVF cell assignment literal-expression vs broadcast-data paths.
+    """IVF cell assignment literal-expression vs Arrow-kernel paths.
 
     The hazard is PLAN BUILD latency and Catalyst tree size: the literal
-    path creates n_centroids × dim Column literals driver-side (the simhash
-    lesson). Past ASSIGN_LITERAL_MAX the centroids ride a broadcast 1-row
-    array frame instead — this probe records build+exec seconds per path
-    and pins their assignment checksums equal."""
+    path creates n_centroids × dim literals driver-side (the simhash
+    lesson). Past ASSIGN_LITERAL_MAX assignment runs the Arrow matmul
+    kernel instead — this probe records build+exec seconds per path and
+    pins their assignment checksums equal."""
     from tempo_spark.pipeline import similarity as sim
 
     corpus = spark.range(n_vecs).select(
@@ -498,12 +498,12 @@ def ivfassign_probe(spark, n_vecs: int, n_centroids: int, dim: int = 64) -> dict
         finally:
             sim.ASSIGN_LITERAL_MAX = saved
 
-    run("broadcast", 0)
+    run("arrow", 0)
     # the literal path at 4096 centroids is exactly the plan-build wall the
     # probe documents — only build it where the driver survives it
     if n_centroids <= 1024:
         run("literal", 10**9)
-        out["paths_agree"] = out["literal"]["checksum"] == out["broadcast"]["checksum"]
+        out["paths_agree"] = out["literal"]["checksum"] == out["arrow"]["checksum"]
     return out
 
 
@@ -1165,8 +1165,6 @@ def thresholds_probe(spark) -> dict:
     recommended values with the formula used."""
     import statistics
 
-    import tempo_spark.pipeline.similarity as sim
-
     out: dict = {}
     # 1. per-job scheduling latency L: the cost floor of ANY extra Spark
     # job (drives driver_threshold and the value of fusing tiny stages)
@@ -1180,42 +1178,7 @@ def thresholds_probe(spark) -> dict:
     L = statistics.median(lat)
     out["job_latency_sec"] = round(L, 4)
 
-    # 2. ASSIGN_ARROW_MIN_OPS: interpreted-HOF assign vs Arrow matmul at
-    # k x dim = 4096 over 100k rows; recommend the smallest measured size
-    # where Arrow wins (on every tested host so far: the literal budget)
-    import random
-
-    random.seed(7)
-    dim, k = 64, 64
-    vecs = spark.range(100_000).selectExpr(
-        "id as vec_id",
-        f"transform(sequence(1, {dim}), j -> cast(pmod(xxhash64(id, j), 1000) as double) / 1000.0) as embedding",
-    )
-    vecs = vecs.cache()
-    vecs.count()
-    centers = [[random.random() for _ in range(dim)] for _ in range(k)]
-    saved = sim.ASSIGN_ARROW_MIN_OPS
-    res = {}
-    try:
-        for name, thr in (("hof", 10**9), ("arrow", 0)):
-            sim.ASSIGN_ARROW_MIN_OPS = thr
-            best = float("inf")
-            for _ in range(3):
-                t0 = time.monotonic()
-                sim._assign_cells(vecs, centers, "vec_id", "embedding").agg(
-                    F.sum("cell")
-                ).collect()
-                best = min(best, time.monotonic() - t0)
-            res[name] = round(best, 3)
-    finally:
-        sim.ASSIGN_ARROW_MIN_OPS = saved
-    vecs.unpersist()
-    out["assign_100k_k64_dim64"] = res
-    out["recommended_ASSIGN_ARROW_MIN_OPS"] = (
-        sim.ASSIGN_LITERAL_MAX if res["arrow"] <= res["hof"] else 8192
-    )
-
-    # 3. driver_threshold (connected components): driver union-find rate
+    # 2. driver_threshold (connected components): driver union-find rate
     # vs the per-round cost of the distributed loop (~3 jobs/round x
     # log2(diameter) rounds). Recommend edges such that driver time ~= one
     # distributed round.
@@ -1237,7 +1200,6 @@ def thresholds_probe(spark) -> dict:
     out["recommended_driver_threshold"] = int(uf_rate * 3 * L)
     out["formulas"] = {
         "driver_threshold": "unionfind_rate x (3 jobs/round x job_latency)",
-        "ASSIGN_ARROW_MIN_OPS": "literal budget if arrow <= hof at kxdim=4096 else keep hof band",
         "AUTO_BIN_ROWS_PER_SERIES": "rerun --disjoint at your series-count shape; bin iff quadratic per-series compares exceed the bin fanout cost (see SCALE.md)",
     }
     return out

@@ -183,8 +183,10 @@ def _two_level_merged(
     e_dtype = df.schema[e].dataType
     dfb = df.withColumn(
         "__mb_bk",
+        # the interval key alone decides the bucket: any split is exact
+        # (see above), and hashing payload columns would only cost work
         F.pmod(
-            F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(n_buckets)
+            F.xxhash64(*[F.col(c) for c in [*series, s, e]]), F.lit(n_buckets)
         ),
     )
 
@@ -915,22 +917,26 @@ class IntervalsDF:
                     f"make_disjoint requires timestamp/date/numeric interval "
                     f"boundaries; column {bc!r} is {bdt.simpleString()}"
                 )
-        bin_seconds = (
-            None
-            if merge_buckets is not None
-            else _resolve_bin_seconds(
-                df, self.start_ts, self.end_ts, self.series_ids, bin_seconds
-            )
+        # every staging name the three pairing paths (plain, binned,
+        # two-level) fabricate; a payload column spelled like one would
+        # otherwise surface as an ambiguous reference deep in the plan
+        reserved = [
+            c
+            for c in df.columns
+            if c.startswith(("__i_", "__mb_", "__seg_", "__sk_"))
+            or c in ("__b", "__gid", "__ext", "__one_vec", "__one", "__bin", "__bin_r")
+        ]
+        if reserved:
+            raise ValueError(f"reserved column names present in input: {reserved}")
+        # with merge_buckets the auto-bin probe is skipped, but the
+        # bin_seconds spelling is still validated
+        bin_seconds = _resolve_bin_seconds(
+            df, self.start_ts, self.end_ts, self.series_ids, bin_seconds,
+            allow_binning=merge_buckets is None,
         )
         s, e = self.start_ts, self.end_ts
         series = self.series_ids
         payload = self.observational_columns
-        if merge_buckets is not None:
-            for c in df.columns:
-                if c.startswith("__mb_"):
-                    raise ValueError(
-                        f"reserved column name {c} present in input"
-                    )
         # NEGATIVE RESULT (round 7): a leading repartition(series) — the
         # collapse that wins for resample(fill=True)/interpolate — drops
         # this operator's exchange count from 4 to 2 but measured ~60%

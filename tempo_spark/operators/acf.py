@@ -30,8 +30,8 @@ from typing import Sequence, Union
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
-from tempo_spark.functions.grid import grid6
-from tempo_spark.operators.indicators import _grid6_sql, _qn
+from tempo_spark.functions.grid import grid6, grid6_sql
+from tempo_spark.operators.indicators import _qn
 
 
 def _sql_str(s: str) -> str:
@@ -148,10 +148,10 @@ def _lagged_corr(
             "*",
             tsdf._exact_micros_order().alias("__ac_o"),
             F.expr(
-                f"xxhash64({_grid6_sql(x_col)}, {_grid6_sql(y_col)})"
+                f"xxhash64({grid6_sql(_qn(x_col))}, {grid6_sql(_qn(y_col))})"
                 " AS __ac_h"
             ),
-            F.expr(f"{_grid6_sql(y_col)} AS __ac_yg"),
+            F.expr(f"{grid6_sql(_qn(y_col))} AS __ac_yg"),
         )
         names = [
             f"__ac_y_{'m' if lag < 0 else ''}{abs(lag)}" for lag in lag_list
@@ -163,7 +163,7 @@ def _lagged_corr(
         ]
         staged = staged.selectExpr(
             *[_qn(k) for k in keys],
-            f"{_grid6_sql(x_col)} AS __ac_x",
+            f"{grid6_sql(_qn(x_col))} AS __ac_x",
             *shifted,
         )
         structs = ", ".join(
@@ -293,7 +293,7 @@ def pairwise_corr(tsdf, metric_cols) -> DataFrame:
     # instead of ~150 py4j round trips per pair
     structs = ", ".join(
         f"struct({_sql_str(a)} AS x_col, {_sql_str(b)} AS y_col,"
-        f" {_grid6_sql(a)} AS x, {_grid6_sql(b)} AS y)"
+        f" {grid6_sql(_qn(a))} AS x, {grid6_sql(_qn(b))} AS y)"
         for a, b in pairs
     )
     ex = (

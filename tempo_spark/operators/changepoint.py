@@ -40,7 +40,8 @@ from typing import Optional
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
-from tempo_spark.operators.indicators import _grid6_sql, _qn
+from tempo_spark.functions.grid import grid6_sql
+from tempo_spark.operators.indicators import _qn
 
 
 def _best_splits(tsdf, base: DataFrame, keys, part_cols) -> DataFrame:
@@ -118,7 +119,7 @@ def _prepared(tsdf, value_col: str):
         keys = ["__cp_g"]
     # one-parse grid (r13): the Column-form grid6 costs ~107 py4j trips
     # per call site; F.expr of its SQL twin builds the same tree in one
-    base = df.withColumn("__cp_y", F.expr(_grid6_sql(value_col))).where(
+    base = df.withColumn("__cp_y", F.expr(grid6_sql(_qn(value_col)))).where(
         F.col("__cp_y").isNotNull()
     )
     return base, keys

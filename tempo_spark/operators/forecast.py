@@ -29,7 +29,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from tempo_spark.functions.freq import parse_freq
-from tempo_spark.operators.indicators import _grid6_sql, _qn
+from tempo_spark.functions.grid import grid6_sql
+from tempo_spark.operators.indicators import _qn
 
 def _step_micros(freq: str) -> int:
     """Exact integer micros per step, derived from freq._UNITS (the one
@@ -80,7 +81,7 @@ def forecast_naive(
         keys = ["__fc_g"]
     # one-parse grid (r13): same tree as grid6(value_col), ~107 fewer
     # py4j trips per forecast call
-    yq = F.expr(_grid6_sql(value_col))
+    yq = F.expr(grid6_sql(_qn(value_col)))
     micros = tsdf._exact_micros_order()
     base = df.select(
         *keys, micros.alias("__fc_us"), yq.alias("__fc_y")
@@ -356,7 +357,7 @@ def forecast_ets(
         "*", micros.alias("__fc_us")
     ).selectExpr(
         *[_qn(k) for k in keys], "__fc_us",
-        f"{_grid6_sql(value_col)} AS __fc_y",
+        f"{grid6_sql(_qn(value_col))} AS __fc_y",
     ).where("__fc_y IS NOT NULL")
 
     qkeys = ", ".join(_qn(k) for k in keys)

@@ -29,7 +29,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.window import Window
 
-
+from tempo_spark.functions.grid import grid6_sql
 
 
 def _qn(name: str) -> str:
@@ -52,15 +52,6 @@ def _ov_sql(tsdf) -> str:
     )
 
 
-def _grid6_sql(name: str) -> str:
-    """SQL text of :func:`grid6` over a column name — same expression."""
-    d = f"cast({_qn(name)} as double)"
-    return (
-        f"(CASE WHEN {d} IS NOT NULL AND NOT isnan({d}) "
-        f"THEN floor({d} * 1000000.0D + 0.5D) / 1000000.0D END)"
-    )
-
-
 def with_rsi(
     tsdf, value_col: str, window: int = 14, out: str = "rsi"
 ) -> DataFrame:
@@ -76,7 +67,7 @@ def with_rsi(
             f"output column {out!r} or __ti_* staging already present"
         )
     w = tsdf.base_window()  # ROWS frames only need the (ts[,seq]) order
-    yq = F.expr(_grid6_sql(value_col))  # one-parse grid (r13)
+    yq = F.expr(grid6_sql(_qn(value_col)))  # one-parse grid (r13)
     diff = yq - F.lag(yq).over(w)  # grid subtraction: exact at 1e-6
     frame = w.rowsBetween(-(window - 1), 0)
     staged = tsdf.df.withColumn("__ti_d", diff)
@@ -112,7 +103,7 @@ def with_bollinger(
         raise ValueError(f"reserved output columns present: {clash}")
     w = tsdf.base_window()
     frame = w.rowsBetween(-(window - 1), 0)
-    yq = F.expr(_grid6_sql(value_col))  # one-parse grid (r13)
+    yq = F.expr(grid6_sql(_qn(value_col)))  # one-parse grid (r13)
     ydec = yq.cast("decimal(18,6)")
     s = F.sum(ydec).over(frame).cast("double")
     q = F.sum(ydec * ydec).over(frame).cast("double")
@@ -224,7 +215,7 @@ def with_atr(
     _ohlc_guard(tsdf, (high_col, low_col, close_col), (out,))
     ov = _ov_sql(tsdf)
     fr = f"ROWS BETWEEN {window - 1} PRECEDING AND CURRENT ROW"
-    hq, lq, cq = _grid6_sql(high_col), _grid6_sql(low_col), _grid6_sql(close_col)
+    hq, lq, cq = (grid6_sql(_qn(c)) for c in (high_col, low_col, close_col))
     pc = f"lag({cq}) OVER ({ov})"
     tr = (
         f"(CASE WHEN {hq} IS NOT NULL AND {lq} IS NOT NULL THEN "
@@ -268,7 +259,7 @@ def with_stochastic(
     _ohlc_guard(tsdf, (high_col, low_col, close_col), outs)
     ov = _ov_sql(tsdf)
     kfr = f"ROWS BETWEEN {k_window - 1} PRECEDING AND CURRENT ROW"
-    hq, lq, cq = _grid6_sql(high_col), _grid6_sql(low_col), _grid6_sql(close_col)
+    hq, lq, cq = (grid6_sql(_qn(c)) for c in (high_col, low_col, close_col))
     hh = f"max({hq}) OVER ({ov} {kfr})"
     ll = f"min({lq}) OVER ({ov} {kfr})"
     full_k = (
@@ -280,13 +271,8 @@ def with_stochastic(
         f"(CASE WHEN ({full_k}) AND {cq} IS NOT NULL AND ({hh} > {ll}) "
         f"THEN 100.0D * ({cq} - {ll}) / ({hh} - {ll}) END)"
     )
-    # quantized %K so the %D mean replays exactly (see docstring); grid6
-    # over the %K EXPRESSION (not a column name) — inline the same guard
-    kd = f"cast({k} as double)"
-    kq = (
-        f"(CASE WHEN {kd} IS NOT NULL AND NOT isnan({kd}) "
-        f"THEN floor({kd} * 1000000.0D + 0.5D) / 1000000.0D END)"
-    )
+    # quantized %K so the %D mean replays exactly (see docstring)
+    kq = grid6_sql(k)
     staged = tsdf.df.selectExpr("*", f"{kq} AS __ti_kq")
     dfr = f"ROWS BETWEEN {d_window - 1} PRECEDING AND CURRENT ROW"
     full_d = (
@@ -319,7 +305,7 @@ def with_williams_r(
     _ohlc_guard(tsdf, (high_col, low_col, close_col), (out,))
     ov = _ov_sql(tsdf)
     fr = f"ROWS BETWEEN {window - 1} PRECEDING AND CURRENT ROW"
-    hq, lq, cq = _grid6_sql(high_col), _grid6_sql(low_col), _grid6_sql(close_col)
+    hq, lq, cq = (grid6_sql(_qn(c)) for c in (high_col, low_col, close_col))
     hh = f"max({hq}) OVER ({ov} {fr})"
     ll = f"min({lq}) OVER ({ov} {fr})"
     full = (
@@ -354,8 +340,8 @@ def with_obv(
     the output replays bit-for-bit cross-engine."""
     _ohlc_guard(tsdf, (close_col, volume_col), (out,))
     ov = _ov_sql(tsdf)
-    cq = _grid6_sql(close_col)
-    vq = _grid6_sql(volume_col)
+    cq = grid6_sql(_qn(close_col))
+    vq = grid6_sql(_qn(volume_col))
     prev = f"lag({cq}) OVER ({ov})"
     signed = (
         f"cast((CASE WHEN {cq} IS NOT NULL AND {prev} IS NOT NULL "
@@ -407,7 +393,7 @@ def with_cusum(
         raise ValueError(f"h must be positive, got {h}")
     w = tsdf.base_window()
     grow = w.rowsBetween(Window.unboundedPreceding, 0)
-    yq = F.expr(_grid6_sql(value_col))  # one-parse grid (r13)
+    yq = F.expr(grid6_sql(_qn(value_col)))  # one-parse grid (r13)
     if target is None:
         full = w.rowsBetween(
             Window.unboundedPreceding, Window.unboundedFollowing

@@ -37,6 +37,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from tempo_spark.functions.grid import hardened_round6
 
 
 def downsample_lttb(tsdf, n_out: int, value_col: str) -> DataFrame:
@@ -68,7 +69,7 @@ def downsample_lttb(tsdf, n_out: int, value_col: str) -> DataFrame:
     # y on the 1e-6 grid (hardened rounding — the cross-engine idiom) so
     # bucket sums can be EXACT decimals; x = µs offset from the series'
     # first observation (small integral values, decimal headroom)
-    yq = F.floor(F.col(value_col).cast("double") * 1e6 + F.lit(0.5)) / F.lit(1e6)
+    yq = hardened_round6(F.col(value_col).cast("double"))
     base = (
         df.withColumn("__lt_pos", F.row_number().over(w))
         .withColumn("__lt_n", F.count(F.lit(1)).over(wall))
@@ -214,7 +215,7 @@ def downsample_minmax(tsdf, n_buckets: int, value_col: str) -> DataFrame:
         order.append(F.col(tsdf.sequence_col))
     w = Window.partitionBy(*series).orderBy(*order)
     wall = Window.partitionBy(*series)
-    yq = F.floor(F.col(value_col).cast("double") * 1e6 + F.lit(0.5)) / F.lit(1e6)
+    yq = hardened_round6(F.col(value_col).cast("double"))
     base = (
         df.withColumn("__lt_pos", F.row_number().over(w))
         .withColumn("__lt_n", F.count(F.lit(1)).over(wall))

@@ -19,7 +19,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
-from tempo_spark.operators.indicators import _grid6_sql, _qn
+from tempo_spark.functions.grid import grid6_sql
+from tempo_spark.operators.indicators import _qn
 
 
 def _fmt_d(x: float) -> str:
@@ -59,7 +60,7 @@ def with_drawdown(
         f"OVER (PARTITION BY {part} ORDER BY {', '.join(ob)}"
         " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
     )
-    yq = _grid6_sql(value_col)
+    yq = grid6_sql(_qn(value_col))
     peak = f"max({yq}) {wfr}"
     staged = df.select("*", tsdf._exact_micros_order().alias("__rb_o"))
     # materialize the window fragment ONCE as `peak` and derive the two
@@ -192,7 +193,7 @@ def with_rolling_quantile(
         )
     w = tsdf.base_window()
     frame = w.rowsBetween(-(window - 1), 0)
-    yq = F.expr(_grid6_sql(value_col))  # one-parse grid (r13)
+    yq = F.expr(grid6_sql(_qn(value_col)))  # one-parse grid (r13)
     # collect_list skips NULL inputs already — no struct wrap needed
     arr = F.array_sort(F.collect_list(yq).over(frame))
     staged = tsdf.df.withColumn("__rq_a", arr)
@@ -266,7 +267,7 @@ def with_hampel(
         raise ValueError(f"reserved output/staging columns present: {clash}")
     w = tsdf.base_window()
     frame = w.rowsBetween(-(window - 1), 0)
-    yq = F.expr(_grid6_sql(value_col))  # one-parse grid (r13)
+    yq = F.expr(grid6_sql(_qn(value_col)))  # one-parse grid (r13)
     staged = tsdf.df.withColumn(
         "__hp_a", F.array_sort(F.collect_list(yq).over(frame))
     )

@@ -36,8 +36,8 @@ import math
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from tempo_spark.functions.grid import grid6
-from tempo_spark.operators.indicators import _grid6_sql, _qn
+from tempo_spark.functions.grid import grid6, grid6_sql, q6_sql
+from tempo_spark.operators.indicators import _qn
 
 
 def _fmt_d(x: float) -> str:
@@ -48,13 +48,6 @@ def _fmt_d(x: float) -> str:
     if not math.isfinite(v):
         raise ValueError(f"non-finite literal: {v!r}")
     return repr(v) + "D"
-
-
-def _q6_sql(sql: str) -> str:
-    """``floor(x*1e6 + 0.5)/1e6`` over a SQL fragment — the RAW grid
-    quantize (no NaN guard; the guarded form is ``_grid6_sql``). Exactly
-    the Column tree ``F.floor(x * 1e6 + F.lit(0.5)) / F.lit(1e6)``."""
-    return f"floor(({sql}) * 1000000.0D + 0.5D) / 1000000.0D"
 
 
 def seasonal_strength(
@@ -192,7 +185,7 @@ def seasonal_decompose(
         "*",
         tsdf._exact_micros_order().alias("__sd_o"),
         F.expr(
-            _q6_sql(f"cast({_qn(value_col)} as double)") + " AS __sd_y"
+            q6_sql(f"cast({_qn(value_col)} as double)") + " AS __sd_y"
         ),
     )
 
@@ -259,7 +252,7 @@ def seasonal_decompose(
     staged = staged.selectExpr(
         "*",
         f"pmod(__sd_pos - 1, {period}) AS __sd_ph",
-        _q6_sql(det_raw) + " AS __sd_det",
+        q6_sql(det_raw) + " AS __sd_det",
     )
 
     # r13: the phase-mean/centering/join-back tail parses as SQL
@@ -275,7 +268,7 @@ def seasonal_decompose(
     pm = pm.selectExpr(
         "*",
         "CASE WHEN __sd_dn > 0 THEN "
-        + _q6_sql("cast(__sd_ds as double) / __sd_dn")
+        + q6_sql("cast(__sd_ds as double) / __sd_dn")
         + " END AS __sd_pm",
     )
     # guard the division: a series too short for ANY trend has zero
@@ -388,7 +381,7 @@ def seasonal_anomalies(
         "PARTITION BY " + ", ".join(_qn(k) for k in keys) if keys else ""
     )
     wser = f"OVER ({part})"
-    staged = dec.selectExpr("*", _grid6_sql("resid") + " AS __sa_rq")
+    staged = dec.selectExpr("*", grid6_sql(_qn("resid")) + " AS __sa_rq")
     rdec = "cast(__sa_rq as decimal(18,6))"
     cnt = f"count(__sa_rq) {wser}"
     s = f"cast(sum({rdec}) {wser} as double)"

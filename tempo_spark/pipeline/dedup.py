@@ -21,12 +21,7 @@ from typing import Optional
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
-
-def _hardened_round6(c: Column) -> Column:
-    """floor(x*1e6+0.5)/1e6 — half-up for the non-negative similarity scores
-    emitted here, and a fixed IEEE op sequence every engine reproduces
-    bit-identically (``round()`` half-way behavior differs across engines)."""
-    return F.floor(c * 1_000_000 + F.lit(0.5)) / 1_000_000
+from tempo_spark.functions.grid import hardened_round6, q6_sql
 
 
 def md5_32(c: Column) -> Column:
@@ -38,12 +33,6 @@ def md5_32(c: Column) -> Column:
     ``hash_family="md5_32"`` variants so the full MinHash/SimHash pipelines
     are cross-engine value-checkable; production paths keep xxhash64."""
     return F.conv(F.substring(F.md5(c.cast("binary")), 1, 8), 16, 10).cast("long")
-
-
-def _md5_32_seeded(h: Column, j: int) -> Column:
-    """Seed-j re-hash of a base hash in the md5_32 family: md5 of the
-    decimal-rendered hash plus ':{j}' (both engines render longs the same)."""
-    return md5_32(F.concat(h.cast("string"), F.lit(f":{j}")))
 
 
 # --------------------------------------------------------------------- exact
@@ -353,7 +342,7 @@ def ngram_contamination(
         id_col,
         "contam_ngrams",
         "n_ngrams",
-        _hardened_round6(frac).alias("contam_frac"),
+        hardened_round6(frac).alias("contam_frac"),
     )
 
 
@@ -453,58 +442,37 @@ def with_hashed_shingles(
 
 
 def _signature_from_hashes(
-    hashed: Column | str, num_hashes: int, hash_family: str = "xxhash64"
+    hashed: str, num_hashes: int, hash_family: str = "xxhash64"
 ) -> Column:
-    """k-min signature from a (materialized) array of base hashes: seed j's
-    hash of a shingle is ``xxhash64(base_hash, j)`` — a fixed-width long
-    re-hash, so each shingle pays ONE variable-length string hash plus k
-    cheap 16-byte hashes (and no long overflow under ANSI mode, unlike
-    affine multiply families). md5_32 family: seeded md5 re-hash instead.
+    """k-min signature from the (materialized) base-hash array column
+    ``hashed``: seed j's hash of a shingle is ``xxhash64(base_hash, j)`` — a
+    fixed-width long re-hash, so each shingle pays ONE variable-length
+    string hash plus k cheap 16-byte hashes (and no long overflow under
+    ANSI mode, unlike affine multiply families). md5_32 family: md5 of the
+    decimal-rendered hash plus ``':{j}'`` (both engines render longs the
+    same).
 
-    Pass a column NAME for the parsed-SQL fast path: k Column-API
-    ``array_min(transform(...))`` chains cost ~25 ms of driver py4j each at
-    plan-build (the simhash lesson — build latency is a real scale axis),
-    while one ``F.expr`` parse of the same k expressions is near-free and
-    bit-identical (a pytest pins equality per family). A nested
+    Built as ONE parsed expression: k Column-API ``array_min(transform(
+    ...))`` chains cost ~25 ms of driver py4j each at plan-build (the
+    simhash lesson — build latency is a real scale axis). A nested
     transform-over-sequence(0,k-1) would also build fast but executes ~4×
     SLOWER: the variable seed defeats per-seed constant folding."""
-    if isinstance(hashed, str):
-        col_sql = f"`{hashed}`"
-        if hash_family == "md5_32":
-            items = [
-                f"array_min(transform({col_sql}, h -> "
-                f"cast(conv(substring(md5(cast(concat(cast(h as string), ':{j}') "
-                f"as binary)), 1, 8), 16, 10) as bigint)))"
-                for j in range(num_hashes)
-            ]
-        elif hash_family == "xxhash64":
-            items = [
-                f"array_min(transform({col_sql}, h -> xxhash64(h, {j})))"
-                for j in range(num_hashes)
-            ]
-        else:
-            raise ValueError(f"unknown hash_family {hash_family!r}")
-        return F.expr("array(" + ", ".join(items) + ")")
-
-    def seeded(j: int):
-        # single-parameter lambda: pyspark introspects lambda arity, so
-        # closure constants must not appear as default parameters
-        if hash_family == "md5_32":
-            return lambda h: _md5_32_seeded(h, j)
-        return lambda h: F.xxhash64(h, F.lit(j))
-
-    return F.array(
-        *[F.array_min(F.transform(hashed, seeded(j))) for j in range(num_hashes)]
-    )
-
-
-def minhash_signature(shingles: Column, num_hashes: int = 16) -> Column:
-    """MinHash signature as ``array<bigint>``. NB: when composing into a
-    DataFrame prefer ``with_minhash``, which materializes the base hash
-    array so it is computed once, not once per hash seed."""
-    return _signature_from_hashes(
-        F.transform(shingles, lambda s: F.xxhash64(s)), num_hashes
-    )
+    col_sql = f"`{hashed}`"
+    if hash_family == "md5_32":
+        items = [
+            f"array_min(transform({col_sql}, h -> "
+            f"cast(conv(substring(md5(cast(concat(cast(h as string), ':{j}') "
+            f"as binary)), 1, 8), 16, 10) as bigint)))"
+            for j in range(num_hashes)
+        ]
+    elif hash_family == "xxhash64":
+        items = [
+            f"array_min(transform({col_sql}, h -> xxhash64(h, {j})))"
+            for j in range(num_hashes)
+        ]
+    else:
+        raise ValueError(f"unknown hash_family {hash_family!r}")
+    return F.expr("array(" + ", ".join(items) + ")")
 
 
 def with_minhash(
@@ -530,43 +498,28 @@ def with_minhash(
     return result if keep_hashed_shingles else result.drop(tmp)
 
 
-def band_key_array(
-    sig: Column | str, bands: int, hash_family: str = "xxhash64"
-) -> Column:
-    """Array of per-band bucket keys for a MinHash signature: band b's key
-    is the hash (or, for md5_32, the raw comma-join — equality-equivalent
-    and replayable) of the signature slice belonging to that band.
+def band_key_array(sig: str, bands: int, hash_family: str = "xxhash64") -> Column:
+    """Array of per-band bucket keys for the MinHash signature column
+    ``sig``: band b's key is the hash (or, for md5_32, the raw comma-join —
+    equality-equivalent and replayable) of the signature slice belonging
+    to that band.
 
-    Pass a column NAME for the parsed-SQL fast path (r13): the ``bands``
-    keys render as ONE ``F.expr`` parse with the band index UNROLLED into
-    an ``array(key_0, …)`` — bands is a small static constant, and the
-    transform-over-sequence form both costs ~150 driver py4j trips to
-    build and runs the slice arithmetic through the interpreted HOF
-    evaluator per row (the repo-wide unroll rule). Values are identical
-    per family (pytest-pinned against the Column form)."""
-    if isinstance(sig, str):
-        q = "`" + sig.replace("`", "``") + "`"
-        rpb = f"(size({q}) / {bands})"
-        items = []
-        for b in range(bands):
-            joined = (
-                f"concat_ws(',', slice({q}, "
-                f"cast(({b} * {rpb}) as int) + 1, cast({rpb} as int)))"
-            )
-            items.append(
-                joined if hash_family == "md5_32" else f"xxhash64({joined})"
-            )
-        return F.expr("array(" + ", ".join(items) + ")")
-    rows_per_band = F.size(sig) / bands  # driver knows num_hashes divides bands
-
-    def band_key(b):
-        joined = F.concat_ws(
-            ",",
-            F.slice(sig, (b * rows_per_band).cast("int") + 1, rows_per_band.cast("int")),
+    The ``bands`` keys render as ONE ``F.expr`` parse with the band index
+    UNROLLED into an ``array(key_0, …)`` (r13) — bands is a small static
+    constant, and a transform-over-sequence form both costs ~150 driver
+    py4j trips to build and runs the slice arithmetic through the
+    interpreted HOF evaluator per row (the repo-wide unroll rule). Values
+    are pinned per family in tests/test_pipeline.py."""
+    q = "`" + sig.replace("`", "``") + "`"
+    rpb = f"(size({q}) / {bands})"
+    items = []
+    for b in range(bands):
+        joined = (
+            f"concat_ws(',', slice({q}, "
+            f"cast(({b} * {rpb}) as int) + 1, cast({rpb} as int)))"
         )
-        return joined if hash_family == "md5_32" else F.xxhash64(joined)
-
-    return F.transform(F.sequence(F.lit(0), F.lit(bands - 1)), band_key)
+        items.append(joined if hash_family == "md5_32" else f"xxhash64({joined})")
+    return F.expr("array(" + ", ".join(items) + ")")
 
 
 def _bucket_capped_self_join(
@@ -752,7 +705,7 @@ def jaccard_verify(
             / F.size(F.array_union("__sh_a", "__sh_b")),
         )
         .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", _hardened_round6(F.col("jaccard")).alias("jaccard"))
+        .select("id_a", "id_b", hardened_round6(F.col("jaccard")).alias("jaccard"))
     )
     return out
 
@@ -836,7 +789,7 @@ def minhash_dedup(
         .where(F.col("jaccard") >= threshold)
         .selectExpr(
             "id_a", "id_b",
-            "(floor(jaccard * 1000000 + 0.5) / 1000000) AS jaccard",
+            q6_sql("jaccard") + " AS jaccard",
         )
     )
     return out
@@ -934,7 +887,7 @@ def near_dedup_against_corpus(
         .select(
             F.col("__new_id").alias(id_col),
             "corpus_id",
-            _hardened_round6(F.col("jaccard")).alias("jaccard"),
+            hardened_round6(F.col("jaccard")).alias("jaccard"),
         )
     )
     return _apply_dedup_mode(new_df, pairs, id_col, mode)
@@ -1582,6 +1535,6 @@ def ngram_jaccard_pairs(
             "jaccard", F.col("__co") / (F.col("__na") + F.col("__nb") - F.col("__co"))
         )
         .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", _hardened_round6(F.col("jaccard")).alias("jaccard"))
+        .select("id_a", "id_b", hardened_round6(F.col("jaccard")).alias("jaccard"))
     )
     return out

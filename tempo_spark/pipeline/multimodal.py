@@ -13,65 +13,17 @@ Compressed video/audio codecs (H.264, MJPEG, MP3, …) still need external
 libraries — those byte-streams yield NULL rows (dirty-corpus tolerance),
 with the integration seam documented on each kernel.
 
-Scale notes: media rows are large; the helpers repartition by byte budget
-(``target_partition_bytes``) before the Python stage so one Arrow batch
-never blows executor memory, and metadata-only transforms stay JVM-side.
+Scale notes: media rows are large; only the decode kernels run in Python
+workers (Arrow-batched ``mapInPandas``), and metadata-only transforms stay
+JVM-side.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Iterator
 
 import pandas as pd
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
-
-#: canonical multimodal schema fragment
-MEDIA_META_DDL = (
-    "media_type string, mime string, width int, height int, "
-    "duration_ms long, sample_rate int"
-)
-
-
-def with_media_meta_placeholder(df: DataFrame, content_col: str = "content") -> DataFrame:
-    """Attach an empty typed metadata struct for a binary content column."""
-    return df.withColumn(
-        "media_meta",
-        F.expr(
-            "named_struct('media_type', CAST(NULL AS string), 'mime', CAST(NULL AS string), "
-            "'width', CAST(NULL AS int), 'height', CAST(NULL AS int), "
-            "'duration_ms', CAST(NULL AS long), 'sample_rate', CAST(NULL AS int))"
-        ),
-    )
-
-
-def repartition_by_bytes(
-    df: DataFrame,
-    size_col: Optional[str] = None,
-    total_bytes: Optional[int] = None,
-    target_partition_bytes: int = 128 << 20,
-) -> DataFrame:
-    """Spread large binary rows so each partition holds ~target bytes.
-
-    Pass ``total_bytes`` when the caller already knows the corpus size
-    (stays fully lazy), or ``size_col`` (a per-row byte count, e.g.
-    ``F.length(content)`` materialized as a column) to measure it here —
-    that path runs ONE eager sum over the column, which parquet statistics
-    usually answer without reading data pages."""
-    if total_bytes is None:
-        if size_col is None:
-            raise ValueError("pass total_bytes or size_col")
-        total_bytes = df.agg(F.sum(F.col(size_col).cast("long"))).first()[0]
-        if total_bytes is None:
-            # an all-null size column would silently collapse a large
-            # binary corpus into ONE partition — surface the bad column
-            raise ValueError(
-                f"size_col {size_col!r} summed to NULL (no non-null sizes); "
-                "fix the column or pass total_bytes explicitly"
-            )
-    n = max(1, int(total_bytes / target_partition_bytes))
-    return df.repartition(n)
-
 
 def decode_images(
     df: DataFrame,

@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import hashlib
 import json
+import logging
 import re
 from typing import Mapping, Optional
 
@@ -430,8 +431,12 @@ def prepare_corpus(
                     sc.setJobDescription(None)
             except Exception:
                 # a failing fill is not this thread's error to raise: the
-                # main lineage re-executes the same plan and surfaces it
-                pass
+                # main lineage re-executes the same plan and surfaces it —
+                # but it is never silent
+                logging.getLogger(__name__).warning(
+                    "prepare_corpus: background prefill of %r failed; the "
+                    "stage recomputes when consumed", name, exc_info=True,
+                )
 
         fill_pool.submit(run)
 

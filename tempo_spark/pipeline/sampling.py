@@ -269,32 +269,6 @@ def temperature_rates(
     )
 
 
-def mix_by_temperature(
-    df: DataFrame,
-    key_col: str,
-    group_col: str,
-    temperature: float,
-    token_col: str | None = None,
-    salt: str = "mix",
-    hash_family: str = "xxhash64",
-    mode: str = "drop",
-) -> DataFrame:
-    """:func:`mix_by_group` with :func:`temperature_rates` — downsample to
-    the τ-scaled mixture in one call (same determinism, same two-scan
-    zero-shuffle plan; the rates frame broadcasts)."""
-    return mix_by_group(
-        df,
-        key_col,
-        group_col,
-        None,
-        token_col=token_col,
-        salt=salt,
-        hash_family=hash_family,
-        mode=mode,
-        rates_df=temperature_rates(df, group_col, temperature, token_col),
-    )
-
-
 def mix_by_group(
     df: DataFrame,
     key_col: str,

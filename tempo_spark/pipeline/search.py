@@ -36,6 +36,7 @@ from typing import Optional
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from tempo_spark.functions.grid import grid6_units
 from tempo_spark.pipeline.text import tokens_col
 
 
@@ -218,7 +219,7 @@ def _bm25_rank(
             .where(F.col("matched") == F.col("__need"))
             .drop("__need", "__nqid")
         )
-    score_q = F.floor(F.col("score") * 1_000_000 + F.lit(0.5))
+    score_q = grid6_units(F.col("score"))
     w = Window.partitionBy("__qid").orderBy(
         score_q.desc(),
         F.col("matched").desc(),

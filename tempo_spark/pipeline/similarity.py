@@ -23,6 +23,8 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
+from tempo_spark.functions.grid import hardened_round6
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -101,22 +103,6 @@ def quantize_embeddings(
         .drop(mx)
     )
     return stepped if keep else stepped.drop(vec_col)
-
-
-def dequantize_embeddings(
-    df: DataFrame,
-    q_col: str = "embedding_q8",
-    scale_col: str = "q8_scale",
-    out: str = "embedding",
-    keep: bool = False,
-) -> DataFrame:
-    """Inverse of ``quantize_embeddings``: ``x ≈ q * scale`` as
-    ``array<double>`` (error ≤ scale/2 per component)."""
-    def dq(c: Column) -> Column:
-        return c.cast("double") * F.col(scale_col)
-
-    stepped = df.withColumn(out, F.transform(F.col(q_col), dq))
-    return stepped if keep else stepped.drop(q_col, scale_col)
 
 
 def brute_force_topk(
@@ -207,29 +193,21 @@ def random_hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[flo
     return planes
 
 
-def hyperplane_bucket(vec: Column | str, planes: list[list[float]]) -> Column:
-    """Sign-bit bucket id: bit i set iff vec·plane_i > 0. Evaluated as a
-    native expression over literal plane arrays.
-
-    ``vec`` as a SQL fragment string builds the whole n_planes×dim literal
-    tree in ONE parsed expression (one py4j round trip instead of one per
-    element — the plan-build-latency discipline; same tree either way,
-    equality pinned in tests/test_similarity_sqlbuild.py)."""
-    if isinstance(vec, str):
-        terms = ["cast(0 as bigint)"]
-        for i, p in enumerate(planes):
-            bit = (
-                f"(case when {_dot_sql(vec, [float(x) for x in p])} > 0 "
-                f"then cast(1 as bigint) else cast(0 as bigint) end)"
-            )
-            terms.append(f"shiftleft({bit}, {i})")
-        return F.expr(" + ".join(terms))
-    bucket = F.lit(0).cast("long")
+def hyperplane_bucket(vec: str, planes: list[list[float]]) -> Column:
+    """Sign-bit bucket id: bit i set iff vec·plane_i > 0, for the SQL
+    fragment ``vec``. Evaluated as a native expression over literal plane
+    arrays, the whole n_planes×dim literal tree built in ONE parsed
+    expression (one py4j round trip instead of one per element — the
+    plan-build-latency discipline; values pinned in
+    tests/test_similarity_sqlbuild.py)."""
+    terms = ["cast(0 as bigint)"]
     for i, p in enumerate(planes):
-        plane = F.array(*[F.lit(float(x)) for x in p])
-        bit = F.when(dot(vec, plane) > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
-        bucket = bucket + F.shiftleft(bit, i)
-    return bucket
+        bit = (
+            f"(case when {_dot_sql(vec, [float(x) for x in p])} > 0 "
+            f"then cast(1 as bigint) else cast(0 as bigint) end)"
+        )
+        terms.append(f"shiftleft({bit}, {i})")
+    return F.expr(" + ".join(terms))
 
 
 def lsh_topk(
@@ -309,56 +287,29 @@ def _dot_sql(vec_sql: str, center: list[float]) -> str:
 
 
 def _center_term_sql(vec_sql: str, center: list[float]) -> str:
-    """SQL text of :func:`_center_score_term` — same tree, one parse."""
-    cn = _fmt_d(sum(x * x for x in center))
-    return f"-2.0D * {_dot_sql(vec_sql, center)} + {cn}"
-
-
-def _center_score_term(vec: Column | str, center: list[float]) -> Column:
-    """THE literal-path distance surrogate to one centroid:
+    """THE literal-path distance surrogate to one centroid, as SQL text:
     ``−2·v·c + ‖c‖²`` (= ‖v−c‖² − ‖v‖²; the ‖v‖² term is rank-invariant).
     ``‖c‖²`` is folded left-to-right driver-side — the same IEEE op order
     as a SQL ``list_reduce`` — so an external engine replays it
     bit-exactly. Single definition shared by the IVF cell scores and the
-    PQ LUT so the cross-engine fold order cannot drift between them.
+    PQ LUT so the cross-engine fold order cannot drift between them."""
+    cn = _fmt_d(sum(x * x for x in center))
+    return f"-2.0D * {_dot_sql(vec_sql, center)} + {cn}"
 
-    ``vec`` may be a Column or a SQL fragment string; the string form
-    parses the whole term in one py4j call (plan-build latency — see
-    :func:`_dot_sql`). Both build the same expression tree."""
-    if isinstance(vec, str):
-        return F.expr(_center_term_sql(vec, center))
-    return F.lit(-2.0) * dot(vec, F.array(*[F.lit(x) for x in center])) + F.lit(
-        sum(x * x for x in center)
+
+def _cell_scores(vec: str, centers: list[list[float]]) -> Column:
+    """array<struct<d,cell>> of squared-distance surrogates from the SQL
+    fragment ``vec`` to each centroid, as a native expression over literal
+    centroid arrays (no shuffle, no UDF) — the ``d`` term is
+    :func:`_center_term_sql`. The whole k×dim literal tree is built as ONE
+    parsed expression (one py4j round trip instead of ~k·dim — measured
+    16×64 ≈ 2,100 round trips ≈ 1-2 s of driver time per plan build on
+    the bench); values pinned by ``tests/test_similarity_sqlbuild.py``."""
+    entries = ",".join(
+        f"named_struct('d', {_center_term_sql(vec, c)}, 'cell', {i})"
+        for i, c in enumerate(centers)
     )
-
-
-def _cell_scores(vec: Column | str, centers: list[list[float]]) -> Column:
-    """array<struct<d,cell>> of squared-distance surrogates to each centroid,
-    as a native expression over literal centroid arrays (no shuffle, no UDF)
-    — the ``d`` term is :func:`_center_score_term`.
-
-    With ``vec`` given as a SQL fragment string, the whole k×dim literal
-    tree is built as ONE parsed expression (one py4j round trip instead of
-    ~k·dim — measured 16×64 ≈ 2,100 round trips ≈ 1-2 s of driver time per
-    plan build on the bench). The parsed tree is node-for-node the same:
-    ``named_struct('d', <term>, 'cell', i)`` == ``F.struct(term.alias('d'),
-    F.lit(i).alias('cell'))``; equality is pinned by
-    ``tests/test_similarity_sqlbuild.py``."""
-    if isinstance(vec, str):
-        entries = ",".join(
-            f"named_struct('d', {_center_term_sql(vec, c)}, 'cell', {i})"
-            for i, c in enumerate(centers)
-        )
-        return F.expr(f"array({entries})")
-    return F.array(
-        *[
-            F.struct(
-                _center_score_term(vec, c).alias("d"),
-                F.lit(i).alias("cell"),
-            )
-            for i, c in enumerate(centers)
-        ]
-    )
+    return F.expr(f"array({entries})")
 
 
 # above this many TOTAL LITERALS (n_centroids × dim — the actual size of
@@ -366,7 +317,8 @@ def _cell_scores(vec: Column | str, centers: list[list[float]]) -> Column:
 # plan: every literal costs driver py4j + Catalyst time per plan build
 # (measured: k=64 × dim=64 = 4096 literals ≈ 5.6 s to BUILD vs 0.8 s on
 # the broadcast path; the simhash lesson at expression scale). Past the
-# budget, centroids travel as broadcast DATA (a 1-row array<struct> frame
+# budget, cell assignment runs the Arrow matmul kernel and the query-side
+# probe takes the centroids as broadcast DATA (a 1-row array<struct> frame
 # cross-joined in) instead of as expressions. Module-level so tests/probes
 # can force either path.
 ASSIGN_LITERAL_MAX = 1024
@@ -408,21 +360,6 @@ def _scored_over(vec: Column, cents_col: Column) -> Column:
     )
 
 
-# above this many k×dim multiply-adds PER ROW the broadcast HOF argmin —
-# interpreted expression evaluation, never codegen'd — stops being viable
-# (measured: k=1024 × dim=16 over 200k rows ≈ minutes) and assignment
-# drops into an Arrow-batched numpy matmul kernel: B rows × k centroids
-# per batch as ONE BLAS call (the faiss recipe — a coarse quantizer at
-# real k IS dense linear algebra). Module-level so tests can force paths.
-# Arrow matmul beats the interpreted broadcast-HOF argmin at EVERY
-# measured size past the literal budget (sf0.1 semantic_dedup, paired
-# same-session reps: k×dim=4096 2.3 vs 5.0 s; 2048 2.3 vs 3.5; 1536 2.4
-# vs 3.3) — the HOF path is interpreted per element while the kernel is
-# one BLAS call per Arrow batch. Boundary == ASSIGN_LITERAL_MAX; raise
-# this in deployments that must keep plans Python-free (the broadcast
-# middle path below remains the no-Python fallback).
-ASSIGN_ARROW_MIN_OPS = 1024
-
 # Hard cap on driver-side quantizer-fit collects (IVF init_mode="local",
 # PQCodec.train). The fit collect's bound is CONTRACTUAL — fit_sample_mod
 # unset on a 100-TB corpus would otherwise pull the whole corpus through
@@ -443,22 +380,21 @@ def suggest_cells(n_vectors: int, dim: int | None = None) -> int:
     point of the IVF cost model.
 
     Pass ``dim`` to get the plan-path warning: when k × dim crosses
-    ``ASSIGN_ARROW_MIN_OPS`` the cell-assignment stage leaves the pure-JVM
-    expression paths and runs the Arrow matmul kernel (right at scale,
-    but a deployment that must stay Python-free should cap k or raise the
-    budget — see the constant's docstring). Also warns when the faiss
-    fit-sample guidance (256·k) exceeds ``MAX_FIT_ROWS`` — pass
-    ``fit_sample_mod`` so the driver fit stays bounded."""
+    ``ASSIGN_LITERAL_MAX`` the cell-assignment stage leaves the pure-JVM
+    literal expression and runs the Arrow matmul kernel (right at scale,
+    but a deployment that must stay Python-free should cap k). Also warns
+    when the faiss fit-sample guidance (256·k) exceeds ``MAX_FIT_ROWS`` —
+    pass ``fit_sample_mod`` so the driver fit stays bounded."""
     import math
     import warnings
 
     if n_vectors < 1:
         raise ValueError(f"n_vectors must be >= 1, got {n_vectors}")
     k = max(1, int(round(math.sqrt(n_vectors))))
-    if dim is not None and k * dim > ASSIGN_ARROW_MIN_OPS:
+    if dim is not None and k * dim > ASSIGN_LITERAL_MAX:
         warnings.warn(
             f"suggest_cells: k={k} × dim={dim} = {k * dim} ops/row crosses "
-            f"ASSIGN_ARROW_MIN_OPS={ASSIGN_ARROW_MIN_OPS}; cell assignment "
+            f"ASSIGN_LITERAL_MAX={ASSIGN_LITERAL_MAX}; cell assignment "
             "will use the Arrow matmul kernel (the right plan at this "
             "size) instead of pure-JVM expressions",
             stacklevel=2,
@@ -611,21 +547,18 @@ def _assign_cells(
 ) -> DataFrame:
     """THE cell-assignment expression (argmin over centroid scores) shared
     by build(init='first') and IVFIndex.assign — build-time and
-    incrementally-added cells must never drift apart. Three regimes by
+    incrementally-added cells must never drift apart. Two regimes by
     per-row work k × dim:
 
     - within ASSIGN_LITERAL_MAX: centroids inline as expression literals
       (zero extra plan nodes);
-    - within ASSIGN_ARROW_MIN_OPS: centroids ride a broadcast 1-row array
-      frame (plan size flat in k; argmin is ``array_min`` over a
-      transform — still no Python). Default boundary equals the literal
-      max (Arrow measured faster at every size past it — see the
-      constant's note); raise ASSIGN_ARROW_MIN_OPS to re-enable this
-      regime where Python workers are unwanted;
-    - above: Arrow-batched numpy matmul (one BLAS call per batch — the
-      only way to get SIMD throughput for genuinely large k; interpreted
-      HOF evaluation measured in MINUTES at k=1024 × 200k rows where the
-      kernel is seconds).
+    - above: Arrow-batched numpy matmul — B rows × k centroids per batch
+      as ONE BLAS call (the faiss recipe: a coarse quantizer at real k IS
+      dense linear algebra). It beat the interpreted broadcast-HOF argmin
+      at every measured size past the literal budget (sf0.1
+      semantic_dedup, paired same-session reps: k×dim=4096 2.3 vs 5.0 s;
+      2048 2.3 vs 3.5; 1536 2.4 vs 3.3), and the HOF form took MINUTES at
+      k=1024 × 200k rows where the kernel takes seconds.
 
     Null or wrong-width vectors get a NULL cell on every path (the naive
     HOF argmin would quietly put them in cell 0 — a null distance sorts
@@ -646,14 +579,6 @@ def _assign_cells(
             F.array_sort(_cell_scores("__vec", centers)), 1
         ).getField("cell")
         return proj.withColumn("cell", F.when(valid, nearest))
-    if len(centers) * dim <= ASSIGN_ARROW_MIN_OPS:
-        joined = proj.crossJoin(
-            F.broadcast(_centers_frame(df.sparkSession, centers))
-        )
-        nearest = F.array_min(
-            _scored_over(F.col("__vec"), F.col("__cents"))
-        ).getField("cell")
-        return joined.withColumn("cell", F.when(valid, nearest)).drop("__cents")
     return proj.withColumn("cell", _arrow_assign_udf(centers)(F.col("__vec")))
 
 
@@ -830,10 +755,10 @@ class IVFIndex:
         centers = [list(r.center) for r in sorted(rows, key=lambda r: r.cell)]
         return IVFIndex(assigned, centers, id_col, vec_col)
 
-    def _probe_cells(self, vec: Column | str, nprobe: int) -> Column:
-        """ids of the nprobe nearest centroids, as a native expression over
-        literal centroid arrays (no shuffle, no UDF). ``vec`` as a SQL
-        fragment builds the literal tree in one parse (see _cell_scores)."""
+    def _probe_cells(self, vec: str, nprobe: int) -> Column:
+        """ids of the nprobe nearest centroids to the SQL fragment ``vec``,
+        as a native expression over literal centroid arrays (no shuffle,
+        no UDF; see _cell_scores)."""
         scored = _cell_scores(vec, self.centers)
         return F.slice(F.array_sort(scored), 1, nprobe).getField("cell")
 
@@ -842,8 +767,8 @@ class IVFIndex:
     ) -> DataFrame:
         """Explode ``frame`` into one row per (query, probed cell) — literal
         centroid expressions within the ASSIGN_LITERAL_MAX k×dim literal
-        budget, broadcast centroid data above (same split, and the same bit-exact scoring, as
-        :func:`_assign_cells`)."""
+        budget, broadcast centroid data above (same bit-exact scoring as
+        :func:`_assign_cells`' literal path)."""
         if _literal_path_ok(self.centers):
             return frame.withColumn(
                 "cell", F.explode(self._probe_cells(_q(vec_col_name), nprobe))
@@ -887,11 +812,6 @@ class IVFIndex:
         )
 
 
-def _hardened_round6(c: Column) -> Column:
-    # fixed IEEE op sequence both Spark and DuckDB reproduce bit-identically
-    return F.floor(c * 1_000_000 + F.lit(0.5)) / 1_000_000
-
-
 def embedding_near_dups(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -932,7 +852,7 @@ def embedding_near_dups(
             .select(
                 F.col(f"a.{id_col}").alias("id_a"),
                 F.col(f"b.{id_col}").alias("id_b"),
-                _hardened_round6(raw).alias("cosine"),
+                hardened_round6(raw).alias("cosine"),
             )
         )
     if dim is None:
@@ -1031,7 +951,7 @@ def embedding_dedup_against_corpus(
         .select(
             F.col("__new_id").alias(id_col),
             "corpus_id",
-            _hardened_round6(F.col("__raw")).alias("cosine"),
+            hardened_round6(F.col("__raw")).alias("cosine"),
         )
     )
     from tempo_spark.pipeline.dedup import _apply_dedup_mode
@@ -1086,7 +1006,7 @@ def semantic_dedup_pairs(
             .select(
                 F.col(f"a.{id_col}").alias("id_a"),
                 F.col(f"b.{id_col}").alias("id_b"),
-                _hardened_round6(F.col("__raw")).alias("cosine"),
+                hardened_round6(F.col("__raw")).alias("cosine"),
             )
         )
 
@@ -1626,7 +1546,7 @@ class PQCodec:
 
     def _lut_expr(self, qvec_sql: str) -> Column:
         """Flat array<double> of length m·ksub: LUT[j·ksub + i] =
-        ‖c_ji‖² − 2·q_j·c_ji (the shared :func:`_center_score_term`),
+        ‖c_ji‖² − 2·q_j·c_ji (the shared :func:`_center_term_sql`),
         literal-expression path — built as ONE parsed expression (the
         m·ksub·dsub literal tree would otherwise cost one py4j round trip
         per element; the plan-build-latency discipline)."""

@@ -16,6 +16,8 @@ from typing import Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
+from tempo_spark.functions.grid import grid6_units, hardened_round6, q6_sql
+
 # small, fixed stopword lists per language — deterministic and cheap to
 # broadcast as literals inside the plan
 STOPWORDS: dict[str, list[str]] = {
@@ -228,7 +230,7 @@ def with_paragraph_langs(
     )
     frac = F.when(
         n_known > 0,
-        F.floor(n_foreign / n_known * 1_000_000 + F.lit(0.5)) / 1_000_000,
+        hardened_round6(n_foreign / n_known),
     )
     return (
         staged.withColumn(out_langs, pl)
@@ -346,7 +348,7 @@ def with_repetition_metrics(
         f"(CASE WHEN {total} > 0 THEN 1.0D - {distinct} / {total} "
         f"ELSE 0.0D END)"
     )
-    hardened = f"floor({frac} * 1000000 + 0.5D) / 1000000"
+    hardened = q6_sql(frac)
     return stepped.selectExpr(
         "*",
         f"{total} AS {_qn(out_total)}",
@@ -429,14 +431,10 @@ def with_ngram_char_fracs(
         ),
         F.first("__chars").alias("__chars"),
     )
-    # the ONE hardened-rounding recipe (cross-engine-critical) — never a
-    # local copy
-    from tempo_spark.pipeline.dedup import _hardened_round6 as hr6
-
     fracs = per_doc.select(
         F.col(id_col).alias("__cf_id"),
-        hr6(F.col("__top.w") / F.col("__chars")).alias(f"top_{n}gram_char_frac"),
-        hr6(F.col("__dup") / F.col("__chars")).alias(f"dup_{n}gram_char_frac"),
+        hardened_round6(F.col("__top.w") / F.col("__chars")).alias(f"top_{n}gram_char_frac"),
+        hardened_round6(F.col("__dup") / F.col("__chars")).alias(f"dup_{n}gram_char_frac"),
     )
     if broadcast_back:
         fracs = F.broadcast(fracs)
@@ -481,10 +479,8 @@ def with_char_entropy(
     per_doc = counts.groupBy(id_col).agg(
         F.sum(-p * F.log2(p)).alias("__h")
     )
-    from tempo_spark.pipeline.dedup import _hardened_round6 as hr6
-
     ent = per_doc.select(
-        F.col(id_col).alias("__ce_id"), hr6(F.col("__h")).alias(out)
+        F.col(id_col).alias("__ce_id"), hardened_round6(F.col("__h")).alias(out)
     )
     if broadcast_back:
         ent = F.broadcast(ent)
@@ -539,8 +535,6 @@ def with_gopher_flags(
     # CSE'd, so inlining `toks`/`lines` into every numerator, denominator
     # and guard would re-split each document ~6× per row (the
     # with_minhash / with_repetition_metrics gotcha)
-    from tempo_spark.pipeline.dedup import _hardened_round6 as hr6
-
     for reserved in ("__gf_toks", "__gf_lines"):
         if reserved in df.columns:
             raise ValueError(f"reserved column name {reserved} present in input")
@@ -560,7 +554,7 @@ def with_gopher_flags(
     )
 
     def safe(num: Column, den: Column) -> Column:
-        return F.when(den > 0, hr6(num / den)).otherwise(F.lit(0.0))
+        return F.when(den > 0, hardened_round6(num / den)).otherwise(F.lit(0.0))
 
     return (
         staged.withColumn("alpha_word_frac", safe(alpha, n_words))
@@ -716,7 +710,7 @@ def tfidf_keywords(
     )
     # quantized primary key + discrete tiebreak — see the ranking note in
     # the docstring (ln() ulp divergence between engines)
-    score_q = F.floor(F.col("tfidf") * 1_000_000 + F.lit(0.5))
+    score_q = grid6_units(F.col("tfidf"))
     w = Window.partitionBy(id_col).orderBy(
         score_q.desc(),
         F.col("tf").desc(),
@@ -1117,7 +1111,7 @@ def top_collocations(
             ),
         )
     )
-    score_q = F.floor(F.col("pmi") * 1_000_000 + F.lit(0.5))
+    score_q = grid6_units(F.col("pmi"))
     ranked = scored.orderBy(
         score_q.desc(),
         F.col("pair_count").desc(),

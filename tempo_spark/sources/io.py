@@ -92,43 +92,6 @@ def write_tsdf(
             logger.warning("ZORDER optimization unavailable: %s", exc)
 
 
-def write_tsdf_bucketed(
-    tsdf,
-    spark: SparkSession,
-    tab_name: str,
-    n_buckets: int = 64,
-    mode: str = "overwrite",
-) -> None:
-    """Write a TSDF as a parquet table BUCKETED by its series ids and
-    sorted by (series, ts) within each bucket — the on-disk, cross-session
-    version of ``TSDF.repartitioned()``.
-
-    A bucketed scan reports ``hashpartitioning(series, n_buckets)`` to
-    Catalyst, so every downstream operator that only needs series
-    clustering — ``withRangeStats`` / resample / grouped stats / EMA
-    windows, and sort-merge equi-joins between two tables bucketed with
-    the SAME bucket count — runs with ZERO shuffle: at 100 TB the
-    per-series shuffle is the dominant cost of every chain, and bucketing
-    pays it once at write time instead of once per query. The sortBy
-    additionally lets the window sort start from bucket-sorted files.
-
-    Pick ``n_buckets`` ≈ target parallelism (executor cores × 2-3); it is
-    fixed at write time and both join sides must match.
-    """
-    series = list(tsdf.series_ids)
-    if not series:
-        raise ValueError("bucketed layout requires at least one series id")
-    if n_buckets <= 0:
-        raise ValueError("n_buckets must be positive")
-    (
-        tsdf.df.write.mode(mode)
-        .format("parquet")
-        .bucketBy(n_buckets, *series)
-        .sortBy(*series, tsdf.ts_col)
-        .saveAsTable(tab_name)
-    )
-
-
 def read_table_tsdf(
     spark: SparkSession,
     tab_name: str,
@@ -138,30 +101,16 @@ def read_table_tsdf(
 ):
     """Catalog-table reader: ``spark.table`` → TSDF. Required for bucketed
     tables — reading the parquet files by PATH discards the bucket spec
-    (it lives in the catalog), and with it the shuffle elision."""
+    (it lives in the catalog), and with it the shuffle elision. A table
+    written with ``df.write.bucketBy(n, *series).sortBy(*series, ts)
+    .saveAsTable(name)`` reports ``hashpartitioning(series, n)``, so every
+    downstream operator that only needs series clustering (range stats,
+    resample, EMA windows, same-``n`` sort-merge joins) runs with ZERO
+    shuffle: the per-series shuffle is paid once, at write time."""
     from tempo_spark.tsdf import TSDF
 
     return TSDF(
         spark.table(tab_name),
-        ts_col=ts_col,
-        series_ids=series_ids,
-        sequence_col=sequence_col,
-    )
-
-
-def read_parquet_tsdf(
-    spark: SparkSession,
-    path: str,
-    ts_col: str,
-    series_ids: Optional[Sequence[str]] = None,
-    sequence_col: Optional[str] = None,
-):
-    """Convenience reader: parquet → TSDF (filters/projections on the result
-    push down to the scan via Catalyst)."""
-    from tempo_spark.tsdf import TSDF
-
-    return TSDF(
-        spark.read.parquet(path),
         ts_col=ts_col,
         series_ids=series_ids,
         sequence_col=sequence_col,

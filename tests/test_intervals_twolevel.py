@@ -167,3 +167,41 @@ def test_merge_buckets_validation(spark):
             df.withColumn("__mb_bk", F.lit(1)),
             "start_ts", "end_ts", ["k"],
         ).make_disjoint(merge_buckets=4)
+
+
+def test_bin_seconds_spelling_checked_with_merge_buckets(spark):
+    # the two-level path skips the auto-bin probe, not the argument check
+    from tempo_spark import IntervalsDF
+
+    df = _dense_frame(spark, n_rows=100, n_series=5, span_steps=3)
+    idf = IntervalsDF(df, "start_ts", "end_ts", ["k"])
+    with pytest.raises(ValueError, match="bin_seconds"):
+        idf.make_disjoint(bin_seconds="bogus", merge_buckets=4)
+
+
+@pytest.mark.parametrize(
+    "path",
+    [{"bin_seconds": None}, {"bin_seconds": 240}, {"merge_buckets": 4}],
+    ids=["plain", "binned", "two_level"],
+)
+def test_staging_names_reserved_on_every_path(spark, path):
+    # a payload column spelled like a staging column is rejected at plan
+    # build on every pairing path (it used to surface as an ambiguous
+    # reference deep in the plan)
+    from tempo_spark import IntervalsDF
+
+    df = _dense_frame(spark, n_rows=100, n_series=5, span_steps=3)
+    for name in ("__i_end", "__mb_w_0", "__seg_start", "__sk_0", "__b",
+                 "__gid", "__ext", "__one_vec", "__one", "__bin", "__bin_r"):
+        idf = IntervalsDF(
+            df.withColumn(name, F.lit(1)), "start_ts", "end_ts", ["k"]
+        )
+        with pytest.raises(ValueError, match="reserved"):
+            idf.make_disjoint(**path)
+    # the coverage ops' presence masks ride through make_disjoint and
+    # stay legal payload names
+    masked = df.withColumn("__a_mask", F.lit(1)).withColumn(
+        "__b_mask", F.lit(None).cast("int")
+    )
+    out = IntervalsDF(masked, "start_ts", "end_ts", ["k"]).make_disjoint(**path)
+    assert {"__a_mask", "__b_mask"} <= set(out.df.columns)

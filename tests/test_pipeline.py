@@ -2,6 +2,7 @@ import pytest
 import pyspark.sql.functions as F
 
 from tempo_spark.pipeline import dedup, similarity, text, multimodal
+from tests.golden_utils import load_cases
 
 
 @pytest.fixture(scope="module")
@@ -368,51 +369,41 @@ class TestMd5HashFamily:
 
     def test_signature_sql_path_matches_column_path(self, docs):
         """with_minhash builds signatures via one parsed-SQL expr (plan-
-        build latency); it must stay bit-identical to the Column-API chain
-        for BOTH hash families (the md5_32 one is oracle-replayed)."""
+        build latency); its values for BOTH hash families (the md5_32 one
+        is oracle-replayed) are frozen in tests/goldens/builder_pins.json,
+        recorded while the Column-API chain still existed and matched."""
+        pins = load_cases("builder_pins")["signature"]
         for fam in ("xxhash64", "md5_32"):
             base = dedup.with_hashed_shingles(
                 docs.where("length(text) > 0"), "text", "__sh", 3, True, fam
             )
-            a = {
-                r.doc_id: r.s
+            got = {
+                str(r.doc_id): list(r.s)
                 for r in base.select(
                     "doc_id", dedup._signature_from_hashes("__sh", 8, fam).alias("s")
                 ).collect()
             }
-            b = {
-                r.doc_id: r.s
-                for r in base.select(
-                    "doc_id",
-                    dedup._signature_from_hashes(F.col("__sh"), 8, fam).alias("s"),
-                ).collect()
-            }
-            assert a == b, fam
+            assert got == pins[fam], fam
 
     def test_band_key_sql_path_matches_column_path(self, docs):
-        """band_key_array's parsed-SQL fast path (name argument, r13)
-        unrolls the band index but must produce the SAME per-band keys as
-        the transform-over-sequence Column form for BOTH hash families
-        (the md5_32 one is oracle-replayed)."""
+        """band_key_array's parsed-SQL form (r13) unrolls the band index;
+        its per-band keys for BOTH hash families (the md5_32 one is
+        oracle-replayed) are frozen in tests/goldens/builder_pins.json,
+        recorded while the transform-over-sequence Column form still
+        existed and matched."""
+        pins = load_cases("builder_pins")["band_keys"]
         for fam in ("xxhash64", "md5_32"):
             sigs = dedup.with_minhash(
                 docs.where("length(text) > 0"), "text", "minhash",
                 16, 3, True, hash_family=fam,
             )
-            a = {
-                r.doc_id: r.bk
+            got = {
+                str(r.doc_id): list(r.bk)
                 for r in sigs.select(
                     "doc_id", dedup.band_key_array("minhash", 4, fam).alias("bk")
                 ).collect()
             }
-            b = {
-                r.doc_id: r.bk
-                for r in sigs.select(
-                    "doc_id",
-                    dedup.band_key_array(F.col("minhash"), 4, fam).alias("bk"),
-                ).collect()
-            }
-            assert a == b, fam
+            assert got == pins[fam], fam
 
     def test_minhash_dedup_tail_identical_both_families(self, docs):
         """minhash_dedup's verify tail went parsed-SQL (r13): full pair
@@ -704,13 +695,6 @@ class TestMultimodal:
         out = multimodal.extract_audio_features(media, fake=True).collect()
         assert all(r.duration_ms == 2 * len(r.content) for r in out)
 
-    def test_meta_placeholder(self, media):
-        out = multimodal.with_media_meta_placeholder(media)
-        assert "media_meta" in out.columns
-        assert out.schema["media_meta"].dataType.fieldNames() == [
-            "media_type", "mime", "width", "height", "duration_ms", "sample_rate"
-        ]
-
 
 class TestIVF:
     def test_ivf_topk_recall(self, spark):
@@ -744,11 +728,13 @@ class TestIVF:
         for qid in e:
             assert len(a[qid] & e[qid]) >= 4, (qid, a[qid], e[qid])
 
-    def test_literal_and_broadcast_assignment_agree(self, spark, monkeypatch):
-        """Past ASSIGN_LITERAL_MAX centroids ride a broadcast data frame
-        instead of expression literals — cell assignment AND topk must be
-        bit-identical between the paths (same IEEE score fold)."""
+    def test_literal_and_broadcast_probe_agree(self, spark, monkeypatch):
+        """Past ASSIGN_LITERAL_MAX the query-side probe takes the centroids
+        as a broadcast data frame instead of expression literals — topk
+        must be bit-identical between the paths (same IEEE score fold),
+        and the probe plan stays shuffle- and Python-free."""
         from tempo_spark.pipeline import similarity as sim
+        from tempo_spark.plans.inspect import count_exchanges, count_python_evals
 
         rows = [
             (i, [float((i * 7 + j * 5) % 13) / 13.0 for j in range(6)])
@@ -758,35 +744,27 @@ class TestIVF:
         queries = vecs.where("vec_id < 3").select(
             F.col("vec_id").alias("query_id"), "embedding"
         )
+        idx = sim.IVFIndex.build(vecs, n_centroids=12, init="first")
 
-        def snapshot():
-            idx = sim.IVFIndex.build(vecs, n_centroids=12, init="first")
-            assign = sorted((r.vec_id, r.cell) for r in idx.assigned.collect())
-            top = sorted(
+        def top():
+            return sorted(
                 (r.query_id, r.vec_id, r.rank, r.cosine)
                 for r in idx.topk(queries, k=4, nprobe=3).collect()
             )
-            return assign, top
 
-        lit_assign, lit_top = snapshot()
+        lit_top = top()
         monkeypatch.setattr(sim, "ASSIGN_LITERAL_MAX", 0)
-        join_assign, join_top = snapshot()
-        assert lit_assign == join_assign
-        assert lit_top == join_top
-        # and the broadcast plan stays shuffle- and Python-free
-        from tempo_spark.plans.inspect import count_exchanges, count_python_evals
-
-        assigned = sim._assign_cells(
-            vecs, [[float(j) for j in range(6)] for _ in range(3)],
-            "vec_id", "embedding",
+        assert top() == lit_top
+        probed = idx._with_probe_cells(
+            queries.select(F.col("embedding").alias("__qvec")), "__qvec", 3
         )
-        assert count_exchanges(assigned) == 0
-        assert count_python_evals(assigned) == 0
+        assert count_exchanges(probed) == 0
+        assert count_python_evals(probed) == 0
 
-    def test_arrow_assignment_matches_broadcast(self, spark, monkeypatch):
-        """Past ASSIGN_ARROW_MIN_OPS per-row work, assignment runs as an
-        Arrow matmul kernel — same cells as the HOF paths on non-tied data,
-        NULL for null/wrong-width vectors."""
+    def test_arrow_assignment_matches_literal(self, spark, monkeypatch):
+        """Past ASSIGN_LITERAL_MAX per-row work, assignment runs as an
+        Arrow matmul kernel — same cells as the literal path on non-tied
+        data, NULL for null/wrong-width vectors."""
         from tempo_spark.pipeline import similarity as sim
 
         rows = [
@@ -811,16 +789,11 @@ class TestIVF:
             for r in sim._assign_cells(vecs, centers, "vec_id", "embedding").collect()
         }
         monkeypatch.setattr(sim, "ASSIGN_LITERAL_MAX", 0)
-        bc = {
-            r.vec_id: r.cell
-            for r in sim._assign_cells(vecs, centers, "vec_id", "embedding").collect()
-        }
-        monkeypatch.setattr(sim, "ASSIGN_ARROW_MIN_OPS", 0)
         ar = {
             r.vec_id: r.cell
             for r in sim._assign_cells(vecs, centers, "vec_id", "embedding").collect()
         }
-        assert ar == bc == lit
+        assert ar == lit
         for vid in (900, 901, 902, 903):
             assert ar[vid] is None, vid
 
@@ -2643,6 +2616,43 @@ class TestPrepareCorpus:
             assert r.pack_id >= 0 and 0 <= r.shard_id < 2
             assert r.n_tokens > 0 and 0 <= r.quality_score <= 1
 
+    def test_failing_prefill_logs_a_warning(self, spark, caplog, monkeypatch):
+        """The background barrier fill swallows its exception (the main
+        lineage recomputes the stage and surfaces any real error) but
+        never silently: each failed fill logs a warning with the
+        traceback, and the result is still correct."""
+        import logging
+        import threading
+        import time
+
+        from tempo_spark.pipeline.prepare import prepare_corpus
+
+        df = spark.createDataFrame(
+            [(0, "alpha beta gamma"), (1, "alpha beta gamma"), (2, "delta")],
+            "doc_id long, text string",
+        )
+        frame_cls = type(df)  # the concrete (classic) DataFrame class
+        real_count = frame_cls.count
+
+        def count(self):
+            if threading.current_thread().name.startswith("tempo-prepare-prefill"):
+                raise RuntimeError("injected prefill failure")
+            return real_count(self)
+
+        monkeypatch.setattr(frame_cls, "count", count)
+        with caplog.at_level(logging.WARNING, logger="tempo_spark.pipeline.prepare"):
+            out = prepare_corpus(df, normalize=True, near_dedup_threshold=0.5)
+            for t in threading.enumerate():
+                if t.name.startswith("tempo-prepare-prefill"):
+                    t.join(timeout=60)
+            deadline = time.monotonic() + 30
+            while not caplog.records and time.monotonic() < deadline:
+                time.sleep(0.1)
+            assert sorted(r.doc_id for r in out.collect()) == [0, 2]
+        failed = [r for r in caplog.records if "prefill" in r.getMessage()]
+        assert failed and all(r.levelno == logging.WARNING for r in failed)
+        assert failed[0].exc_info[1].args == ("injected prefill failure",)
+
     def test_staging_releases_persist_barriers(self, spark):
         """r9: CorpusStaging tracks every persist barrier and unpersists
         them deterministically on release/context-exit — without it the
@@ -3096,7 +3106,11 @@ class TestEmbeddingStorage:
         df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
         q = similarity.quantize_embeddings(df, keep=True)
         assert dict(q.dtypes)["embedding_q8"] == "array<tinyint>"
-        dq = similarity.dequantize_embeddings(q, out="emb2", keep=True)
+        # dequantize: x ≈ q * scale
+        dq = q.withColumn(
+            "emb2",
+            F.transform("embedding_q8", lambda c: c.cast("double") * F.col("q8_scale")),
+        )
         for r in dq.collect():
             err = max(abs(a - b) for a, b in zip(r.embedding, r.emb2))
             assert err <= r.q8_scale / 2 + 1e-9
@@ -3889,10 +3903,7 @@ class TestTemperatureMix:
         assert got == {"en": 1.0, "de": 1.0, "sw": 1.0}
 
     def test_low_tau_flattens_toward_uniform(self, spark):
-        from tempo_spark.pipeline.sampling import (
-            mix_by_temperature,
-            temperature_rates,
-        )
+        from tempo_spark.pipeline.sampling import mix_by_group, temperature_rates
 
         df = self._df(spark)
         tau = 0.3
@@ -3913,7 +3924,10 @@ class TestTemperatureMix:
         assert got["sw"] == 1.0 and got["en"] < got["de"] < 1.0
         # applied mixture approximates the shares (hash sampling)
         kept = (
-            mix_by_temperature(df, "doc_id", "lang", tau)
+            mix_by_group(
+                df, "doc_id", "lang", None,
+                rates_df=temperature_rates(df, "lang", tau),
+            )
             .groupBy("lang")
             .count()
             .collect()
@@ -5689,7 +5703,7 @@ class TestSuggestCells:
         import pytest
 
         from tempo_spark.pipeline.similarity import (
-            ASSIGN_ARROW_MIN_OPS,
+            ASSIGN_LITERAL_MAX,
             MAX_FIT_ROWS,
             suggest_cells,
         )
@@ -5704,9 +5718,9 @@ class TestSuggestCells:
             warnings.simplefilter("error")
             suggest_cells(100, dim=16)  # k=10, 160 ops < budget
         # crossing the Arrow budget warns with the constant named
-        with pytest.warns(UserWarning, match="ASSIGN_ARROW_MIN_OPS"):
+        with pytest.warns(UserWarning, match="ASSIGN_LITERAL_MAX"):
             k = suggest_cells(1_000_000, dim=128)  # k=1000 x 128 ops
-        assert k == 1000 and k * 128 > ASSIGN_ARROW_MIN_OPS
+        assert k == 1000 and k * 128 > ASSIGN_LITERAL_MAX
         # fit-sample guidance past MAX_FIT_ROWS warns toward fit_sample_mod
         with pytest.warns(UserWarning, match="fit_sample_mod"):
             suggest_cells(10**9)

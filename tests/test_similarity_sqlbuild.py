@@ -1,20 +1,19 @@
-"""r12 optimization pins: the one-parse SQL literal paths build the SAME
-expression trees as the per-element Column forms (bit-identical results),
-and the _local_lloyd sorted-segment centroid update is bit-equal to the
-boolean-mask form it replaced.
+"""r12 optimization pins: the one-parse SQL literal paths produce the
+values the per-element Column forms they replaced produced (frozen in
+tests/goldens/builder_pins.json, recorded while both forms existed and
+were asserted bit-identical), and the _local_lloyd sorted-segment
+centroid update is bit-equal to the boolean-mask form it replaced.
 
 Plan-build latency is the motivation (guide §7.3 / the repo's parsed-SQL
 discipline): the Column forms cost one py4j round trip per literal —
 measured 16×64 centroids ≈ 2,100 round trips ≈ seconds per plan build —
 while the SQL form is one parse. These tests are the drift fence: any
-divergence between the two construction paths is a correctness bug, not a
-perf regression.
+divergence from the pinned values is a correctness bug, not a perf
+regression.
 """
 
 import random
-import struct
 
-import pyspark.sql.functions as F
 import pytest
 
 from tempo_spark.pipeline.similarity import (
@@ -23,17 +22,14 @@ from tempo_spark.pipeline.similarity import (
     hyperplane_bucket,
     random_hyperplanes,
 )
-
-
-def _bits(x):
-    return None if x is None else struct.pack("<d", x)
+from tests.golden_utils import load_cases
 
 
 @pytest.fixture(scope="module")
 def vec_df(spark):
     rng = random.Random(7)
     rows = [([rng.uniform(-2, 2) for _ in range(17)],) for _ in range(60)]
-    rows.append((None,))  # null vector must NULL through both paths
+    rows.append((None,))  # a null vector scores NULL distances
     return spark.createDataFrame(rows, "v array<double>")
 
 
@@ -45,19 +41,18 @@ class TestSqlLiteralPathParity:
         centers[0][0] = 1e-17
         centers[1][2] = -123456.789e-3
         centers[2][5] = 2.0 ** -40
-        a = vec_df.select(_cell_scores(F.col("v"), centers).alias("s")).collect()
-        b = vec_df.select(_cell_scores("v", centers).alias("s")).collect()
-        for ra, rb in zip(a, b):
-            assert (ra.s is None) == (rb.s is None)
-            for sa, sb in zip(ra.s or [], rb.s or []):
-                assert _bits(sa.d) == _bits(sb.d)
-                assert sa.cell == sb.cell
+        got = [
+            None if r.s is None
+            else [[None if s.d is None else s.d.hex(), s.cell] for s in r.s]
+            for r in vec_df.select(_cell_scores("v", centers).alias("s")).collect()
+        ]
+        # float.hex is exact: equal strings <=> bit-identical doubles
+        assert got == load_cases("builder_pins")["cell_scores"]
 
     def test_hyperplane_bucket_bit_identical(self, vec_df):
         planes = random_hyperplanes(17, 6, seed=11)
-        a = vec_df.select(hyperplane_bucket(F.col("v"), planes).alias("b")).collect()
-        b = vec_df.select(hyperplane_bucket("v", planes).alias("b")).collect()
-        assert [r.b for r in a] == [r.b for r in b]
+        got = [r.b for r in vec_df.select(hyperplane_bucket("v", planes).alias("b")).collect()]
+        assert got == load_cases("builder_pins")["hyperplane_bucket"]
 
 
 class TestLloydSortedUpdateParity:

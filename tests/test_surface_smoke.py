@@ -123,27 +123,15 @@ class TestTsdfSurfaces:
 
 
 class TestPlanInspectors:
-    def test_pushed_filters_and_clustering(self, spark, tmp_path):
-        from tempo_spark.plans.inspect import (
-            has_pushed_filters,
-            is_series_clustered,
-            plan_size_bytes_cached,
-        )
+    def test_plan_size_cached(self, spark, tmp_path):
+        from tempo_spark.plans.inspect import plan_size_bytes_cached
 
         p = str(tmp_path / "t")
         spark.range(100).selectExpr("id", "id % 5 AS k").write.parquet(p)
         df = spark.read.parquet(p)
-        assert has_pushed_filters(df.where(F.col("id") > 50))
-        assert not has_pushed_filters(df)
-        assert not is_series_clustered(df, ["k"])
-        # documented contract: a bare repartition node reads as NOT
-        # clustered (the probe counts its exchange); a source whose
-        # partitioning already satisfies the grouping (spark.range's
-        # RangePartitioning — the r4 lesson) reads as clustered
-        assert not is_series_clustered(df.repartition("k"), ["k"])
-        assert is_series_clustered(spark.range(10), ["id"])
         size = plan_size_bytes_cached(df)
         assert size is None or size > 0
+        assert plan_size_bytes_cached(df) == size  # memoized
 
 
 class TestDedupHelpers:
@@ -153,7 +141,7 @@ class TestDedupHelpers:
             char_shingles,
             content_digest,
             jaccard_verify,
-            minhash_signature,
+            with_minhash,
             word_shingles,
         )
 
@@ -173,16 +161,14 @@ class TestDedupHelpers:
             content_digest(F.col("text")).alias("d")
         ).collect()[0].d
         assert nulld == "__null_text__"  # null-safe sentinel, never NULL
-        sig = df.where("text IS NOT NULL").select(
-            "doc_id",
-            minhash_signature(
-                word_shingles(F.col("text"), 3), num_hashes=8
-            ).alias("sig"),
+        sig = with_minhash(
+            df.where("text IS NOT NULL"), "text", "sig", num_hashes=8,
+            shingle_k=3, use_words=True,
         )
         srow = sig.collect()[0]
         assert len(srow.sig) == 8
         bands = sig.select(
-            "doc_id", band_key_array(F.col("sig"), 4).alias("bk")
+            "doc_id", band_key_array("sig", 4).alias("bk")
         ).collect()
         assert all(len(r.bk) == 4 for r in bands)
         cands = spark.createDataFrame([(0, 1)], "id_a long, id_b long")
@@ -208,9 +194,7 @@ class TestSimilarityPqHelpers:
             df.select(
                 "id",
                 dot(F.col("v"), F.col("v")).alias("d"),
-                hyperplane_bucket(
-                    F.col("v"), [[1.0, 0.0], [0.0, 1.0]]
-                ).alias("b"),
+                hyperplane_bucket("v", [[1.0, 0.0], [0.0, 1.0]]).alias("b"),
             ).collect(),
             key=lambda r: r.id,
         )
@@ -253,17 +237,6 @@ class TestTextAndSamplingHelpers:
         assert 0 <= row.b < 1_000_000
         empty = df.select(tokens_col(F.lit("")).alias("t")).collect()[0].t
         assert empty == []
-
-    def test_repartition_by_bytes(self, spark):
-        from tempo_spark.pipeline.multimodal import repartition_by_bytes
-
-        df = spark.createDataFrame(
-            [(i, b"x" * 1000) for i in range(64)], "id long, data binary"
-        )
-        out = repartition_by_bytes(df, total_bytes=64_000,
-                                   target_partition_bytes=8_000)
-        assert out.count() == 64
-        assert out.rdd.getNumPartitions() == 8
 
 
 class TestCodecDataclassesAndIntervals:

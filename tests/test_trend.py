@@ -108,3 +108,18 @@ class TestFitTrend:
             ts_col="ts", series_ids=["sym"],
         )
         assert count_exchanges(t2.fit_trend("v")) == 1
+
+    def test_nan_value_is_skipped_like_null(self, spark):
+        # y = t over 5 points plus one NaN row: an unguarded floor turned
+        # the NaN into 0.0 (n_obs=6, slope≈-0.03, r2≈0.2); on the guarded
+        # grid it quantizes to NULL and is dropped
+        base = dt.datetime(2024, 1, 1)
+        rows = [("a", base + dt.timedelta(seconds=i), float(i)) for i in range(5)]
+        rows.append(("a", base + dt.timedelta(seconds=5), float("nan")))
+        r = TSDF(_mk(spark, rows), ts_col="ts", series_ids=["sym"]).fit_trend(
+            "v"
+        ).collect()[0]
+        assert r.n_obs == 5
+        assert r.slope_per_sec == pytest.approx(1.0, abs=1e-12)
+        assert r.intercept == pytest.approx(0.0, abs=1e-12)
+        assert r.r2 == pytest.approx(1.0, abs=1e-12)

@@ -240,17 +240,6 @@ class TestWriter:
             )
 
 
-class TestReader:
-    def test_read_parquet_tsdf(self, spark, tmp_path, trades):
-        from tempo_spark.sources.io import read_parquet_tsdf
-
-        p = str(tmp_path / "trades.parquet")
-        trades.write.mode("overwrite").parquet(p)
-        t = read_parquet_tsdf(spark, p, ts_col="event_ts", series_ids=["symbol"])
-        assert t.df.count() == trades.count()
-        assert t.series_ids == ["symbol"]
-
-
 class TestNanosParse:
     def test_parse_preserves_subsecond(self, spark):
         from tempo_spark.functions.timestamps import parse_nanos_timestamp
@@ -300,14 +289,23 @@ class TestCrossValidatorEndToEnd:
         assert min(model.avgMetrics) < 1e-3
 
 
+def _write_bucketed(df, name: str, n_buckets: int) -> None:
+    """Parquet table bucketed by series and sorted by (series, ts) within
+    each bucket — the layout read_table_tsdf's shuffle elision serves."""
+    (
+        df.write.mode("overwrite").format("parquet")
+        .bucketBy(n_buckets, "symbol").sortBy("symbol", "event_ts")
+        .saveAsTable(name)
+    )
+
+
 class TestBucketedIO:
     def test_bucketed_table_elides_series_shuffles(self, spark, trades):
         from tempo_spark import TSDF
         from tempo_spark.plans.inspect import count_exchanges
-        from tempo_spark.sources.io import read_table_tsdf, write_tsdf_bucketed
+        from tempo_spark.sources.io import read_table_tsdf
 
-        t = TSDF(trades, ts_col="event_ts", series_ids=["symbol"])
-        write_tsdf_bucketed(t, spark, "trades_bucketed", n_buckets=4)
+        _write_bucketed(trades, "trades_bucketed", 4)
         try:
             tb = read_table_tsdf(spark, "trades_bucketed", "event_ts", ["symbol"])
             # per-series operators need hashpartitioning(symbol) — the
@@ -342,13 +340,11 @@ class TestBucketedIO:
     def test_same_bucket_join_no_shuffle(self, spark, trades):
         import pyspark.sql.functions as F
 
-        from tempo_spark import TSDF
         from tempo_spark.plans.inspect import count_exchanges
-        from tempo_spark.sources.io import read_table_tsdf, write_tsdf_bucketed
+        from tempo_spark.sources.io import read_table_tsdf
 
-        t = TSDF(trades, ts_col="event_ts", series_ids=["symbol"])
-        write_tsdf_bucketed(t, spark, "tb_a", n_buckets=4)
-        write_tsdf_bucketed(t, spark, "tb_b", n_buckets=4)
+        _write_bucketed(trades, "tb_a", 4)
+        _write_bucketed(trades, "tb_b", 4)
         try:
             a = read_table_tsdf(spark, "tb_a", "event_ts", ["symbol"]).df
             b = read_table_tsdf(spark, "tb_b", "event_ts", ["symbol"]).df
@@ -365,19 +361,6 @@ class TestBucketedIO:
         finally:
             spark.sql("DROP TABLE IF EXISTS tb_a")
             spark.sql("DROP TABLE IF EXISTS tb_b")
-
-    def test_bucketed_validation(self, spark, trades):
-        import pytest as _pytest
-
-        from tempo_spark import TSDF
-        from tempo_spark.sources.io import write_tsdf_bucketed
-
-        t_noseries = TSDF(trades, ts_col="event_ts", series_ids=[])
-        with _pytest.raises(ValueError):
-            write_tsdf_bucketed(t_noseries, spark, "nope")
-        t = TSDF(trades, ts_col="event_ts", series_ids=["symbol"])
-        with _pytest.raises(ValueError):
-            write_tsdf_bucketed(t, spark, "nope", n_buckets=0)
 
 
 class TestZOrderLayout:
